@@ -508,8 +508,7 @@ object Plans {
     // floor never resolves to), dumped against the lane's clone-free
     // run-local manifest over the pristine store (r17)
     locally {
-      ops.SimilarityOps.indexVersions(spark, d)
-      val pristine = ops.SimilarityOps.versionDir(d)
+      val pristine = ops.SimilarityOps.stageVersionStore(spark, d)
       val laneRoot =
         s"${System.getProperty("java.io.tmpdir")}/graft_vacplan"
       graft.io.LayoutFs.deleteTree(laneRoot)

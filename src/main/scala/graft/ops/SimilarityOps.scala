@@ -6,6 +6,7 @@ import graft.expressions.VecDot.vecDot
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
 /** Similarity search over `embeddings` (north-star: ANN retrieval for
   * training-data curation).
@@ -2110,13 +2111,14 @@ cb$r AS MATERIALIZED (
     * for them at any scale.
     */
   private[graft] def ingestCoderKitDf(s: SparkSession, d: String)
-      : (DataFrame, PqBooks) = {
-    val kit = sharedKitAtNq(s, d)
-    val centsRow = kit.cents
-      .agg(array_sort(collect_list(struct(col("cid"), col("cv"), col("cn"))))
-        .as("cents"))
-    (centsRow.localCheckpoint(true), kit.books)
-  }
+      : (DataFrame, PqBooks) =
+    cachedAs(s, d, "coderkit") {
+      val kit = sharedKitAtNq(s, d)
+      val centsRow = kit.cents
+        .agg(array_sort(collect_list(struct(col("cid"), col("cv"), col("cn"))))
+          .as("cents"))
+      (centsRow.localCheckpoint(true), kit.books)
+    }
 
   /** Stream-side residual PQ argmin structs — q173 plugs the arriving
     * vector's residual column into the shared kernel.
@@ -3316,13 +3318,17 @@ tvadc AS (SELECT tvcnd.qid, tvcnd.vec_id,
     * false (schema-exact empty relation).
     */
   private[graft] def openPartDirs(
-      s: SparkSession, dir: String, subdirs: Seq[String]): DataFrame = {
+      s: SparkSession, dir: String, subdirs: Seq[String]): DataFrame =
+    openPartDirsWith(s.read, dir, subdirs)
+
+  private def openPartDirsWith(reader: org.apache.spark.sql.DataFrameReader,
+      dir: String, subdirs: Seq[String]): DataFrame = {
     // existence resolves through the path's Hadoop FileSystem (r15
     // ADVICE: java.nio only ever worked on local disk — this is the
     // code path a cluster runs against HDFS/S3)
     val paths = subdirs.map(sd => s"$dir/$sd").filter(graft.io.LayoutFs.exists)
-    if (paths.isEmpty) s.read.parquet(dir).filter(lit(false))
-    else s.read.option("basePath", dir).parquet(paths: _*)
+    if (paths.isEmpty) reader.parquet(dir).filter(lit(false))
+    else reader.option("basePath", dir).parquet(paths: _*)
   }
 
   private[graft] def openCells(
@@ -3558,10 +3564,27 @@ tvadc AS (SELECT tvcnd.qid, tvcnd.vec_id,
   //      (the old snapshot is byte-identical to pre-delta state) AND
   //      the post-swap read (identical to a full rebuild). ----
   def indexVersions(s: SparkSession, d: String): DataFrame = {
+    val out = stageVersionStore(s, d)
+    val probeCells = sharedKitAtNq(s, d).probes.filter(col("qid") === 0)
+      .select("cell").collect().map(_.getLong(0)).sorted.toSeq
+    Seq(0, 1).map { pin =>
+      genPinnedRead(s, out, pin, probeCells)
+        .select(lit(pin).as("gen_pin"), col("cell"), col("vec_id"),
+                col("s"), col("code"), col("err_e6"))
+    }.reduce(_ unionByName _)
+      .orderBy("gen_pin", "cell", "vec_id", "s")
+  }
+
+  /** Stage q191's generation store (g0, the g1 fold, and the manifest
+    * committing both) unless its marker is current, and return its
+    * root. Lanes that only serve from the store enter here; a current
+    * marker costs one file read and starts no Spark job.
+    */
+  private[graft] def stageVersionStore(s: SparkSession, d: String): String = {
     val out = versionDir(d)
     val marker = java.nio.file.Paths.get(out, "_VERSIONED_OK")
-    val kit = sharedKitAtNq(s, d)
     if (!graft.Fixtures.markerCurrent(marker, s"$d/embeddings.parquet")) {
+      val kit = sharedKitAtNq(s, d)
       graft.Fixtures.clearDir(java.nio.file.Paths.get(out))
       // generation 0: bulk load of the pre-delta corpus
       compactionCodes(kit, col("vec_id") % 7 =!= 3)
@@ -3575,10 +3598,8 @@ tvadc AS (SELECT tvcnd.qid, tvcnd.vec_id,
         .localCheckpoint(true)
       val touched = delta.select("cell").distinct()
         .collect().map(_.getLong(0)).sorted.toSeq
-      val merged = openCells(s, s"$out/g0", touched)
+      val merged = openGenCells(s, s"$out/g0", touched)
         .filter(col("cell").isin(touched: _*))
-        .select(col("vec_id"), col("cell").cast("long").as("cell"),
-                col("s"), col("code"), col("err_e6"))
         .unionByName(delta.repartition(col("cell"))
           .sortWithinPartitions("cell", "vec_id", "s")
           .select("vec_id", "cell", "s", "code", "err_e6"))
@@ -3587,15 +3608,38 @@ tvadc AS (SELECT tvcnd.qid, tvcnd.vec_id,
       commitManifest(s, out, gen = 1, dir = "g1", cells = touched)
       graft.Fixtures.writeMarker(marker, s"$d/embeddings.parquet")
     }
-    val probeCells = kit.probes.filter(col("qid") === 0)
-      .select("cell").collect().map(_.getLong(0)).sorted.toSeq
-    Seq(0, 1).map { pin =>
-      genPinnedRead(s, out, pin, probeCells)
-        .select(lit(pin).as("gen_pin"), col("cell"), col("vec_id"),
-                col("s"), col("code"), col("err_e6"))
-    }.reduce(_ unionByName _)
-      .orderBy("gen_pin", "cell", "vec_id", "s")
+    out
   }
+
+  /** The layout every manifest writer fixes (commitManifest,
+    * seedManifest, vacuumManifest): (cell, dir) rows under gen=N.
+    * Reads pin it, so none starts Spark's parquet schema-inference job.
+    */
+  private val ManifestSchema = StructType(Seq(
+    StructField("cell", LongType), StructField("dir", StringType),
+    StructField("gen", IntegerType)))
+
+  private def readManifest(s: SparkSession, manifestDir: String): DataFrame =
+    s.read.schema(ManifestSchema).parquet(manifestDir)
+
+  /** The (gen, cell, dir) manifest rows matching `pred`, collected —
+    * metadata-scale (≤ generations × cells).
+    */
+  private def manifestRows(
+      s: SparkSession, manifestDir: String, pred: Column): Seq[(Int, Long, String)] =
+    readManifest(s, manifestDir).filter(pred).select("gen", "cell", "dir")
+      .collect().map(r => (r.getInt(0), r.getLong(1), r.getString(2))).toSeq
+
+  /** The layout of a generation-store directory as stageVersionStore
+    * writes it: postings partitioned by cell. Field order is the
+    * column order of a pinned read.
+    */
+  private val GenStoreSchema = StructType(
+    Seq("cell", "vec_id", "s", "code", "err_e6").map(StructField(_, LongType)))
+
+  /** [[openCells]] on a generation-store directory, schema pinned. */
+  private def openGenCells(s: SparkSession, dir: String, cells: Seq[Long]): DataFrame =
+    openPartDirsWith(s.read.schema(GenStoreSchema), dir, cells.map(c => s"cell=$c"))
 
   /** One manifest commit: a (cell, dir) relation written under
     * manifest/gen=N — append-only, generation-partitioned, and tiny
@@ -3648,25 +3692,19 @@ tvadc AS (SELECT tvcnd.qid, tvcnd.vec_id,
         require(pin >= floor,
           s"pin $pin is below the vacuum floor $floor: its generation data was reclaimed")
       }
-    val owners = s.read.parquet(manifestDir)
-      .filter(col("gen") <= pin && col("cell").isin(probeCells: _*))
-      .groupBy("cell").agg(max(struct(col("gen"), col("dir"))).as("o"))
-      .select(col("cell"), col("o.dir").as("dir"))
-      .collect().map(r => (r.getLong(0), r.getString(1)))
-    // explicit schema: a fully-vacuumed generation directory may hold
-    // nothing but _SUCCESS, so the base cannot be inferred from files
+    // owner = max (gen, dir) per cell, folded on the driver over the
+    // ≤ k collected rows (a groupBy would add an AQE shuffle's jobs)
+    val owners = manifestRows(s, manifestDir,
+        col("gen") <= pin && col("cell").isin(probeCells: _*))
+      .groupBy(_._2).toSeq
+      .map { case (cell, rs) => (cell, rs.map(r => (r._1, r._3)).max._2) }
+    // the fold's base: with no owned probe cell the read is empty
     val empty = s.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType(
-        Seq("cell", "vec_id", "s", "code", "err_e6").map(n =>
-          org.apache.spark.sql.types.StructField(
-            n, org.apache.spark.sql.types.LongType))))
+      new java.util.ArrayList[org.apache.spark.sql.Row](), GenStoreSchema)
     owners.groupBy(_._2).toSeq.sortBy(_._1).map { case (dir, cs) =>
       val cells = cs.map(_._1).sorted
-      openCells(s, s"$dataRoot/$dir", cells.toIndexedSeq)
+      openGenCells(s, s"$dataRoot/$dir", cells)
         .filter(col("cell").isin(cells: _*))
-        .select(col("cell").cast("long").as("cell"), col("vec_id"),
-                col("s"), col("code"), col("err_e6"))
     }.foldLeft(empty)(_ unionByName _)
   }
 
@@ -3739,9 +3777,9 @@ tvadc AS (SELECT tvcnd.qid, tvcnd.vec_id,
     */
   private[graft] def cloneVersionStoreTo(s: SparkSession, d: String,
                                          root: String): String = {
-    indexVersions(s, d) // stages the source store if absent
+    val src = stageVersionStore(s, d)
     graft.io.LayoutFs.deleteTree(root)
-    graft.io.LayoutFs.cloneTree(versionDir(d), root)
+    graft.io.LayoutFs.cloneTree(src, root)
     root
   }
 
@@ -3760,10 +3798,7 @@ tvadc AS (SELECT tvcnd.qid, tvcnd.vec_id,
     val recorded = graft.io.LayoutFs.readSmallFile(floorPath)
       .map(_.trim.toInt).getOrElse(Int.MinValue)
     val eff = math.max(recorded, floor)
-    val rows = s.read.parquet(s"$root/manifest")
-      .filter(col("gen") <= eff)
-      .select(col("gen").cast("int"), col("cell"), col("dir"))
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getString(2)))
+    val rows = manifestRows(s, s"$root/manifest", col("gen") <= eff)
     val ownerGen = rows.groupBy(_._2).map { case (c, rs) => c -> rs.map(_._1).max }
     val stale = rows.filter { case (g, c, _) => g < ownerGen(c) }
     stale.foreach { case (_, c, dir) =>
@@ -3795,10 +3830,7 @@ tvadc AS (SELECT tvcnd.qid, tvcnd.vec_id,
     val recorded = graft.io.LayoutFs.readSmallFile(floorPath)
       .map(_.trim.toInt).getOrElse(Int.MinValue)
     val eff = math.max(recorded, floor)
-    val rows = s.read.parquet(manifestDir)
-      .filter(col("gen") <= eff)
-      .select(col("gen").cast("int"), col("cell"), col("dir"))
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getString(2)))
+    val rows = manifestRows(s, manifestDir, col("gen") <= eff)
     val ownerGen = rows.groupBy(_._2).map { case (c, rs) => c -> rs.map(_._1).max }
     val stale = rows.filter { case (g, c, _) => g < ownerGen(c) }
     // rewrite only the generations that lost rows (manifest-scale)
@@ -3840,7 +3872,7 @@ tvadc AS (SELECT tvcnd.qid, tvcnd.vec_id,
       s: SparkSession, srcManifest: String, dstManifest: String,
       gens: Seq[Int]): Unit =
     gens.foreach { g =>
-      s.read.parquet(srcManifest).filter(col("gen") === g)
+      readManifest(s, srcManifest).filter(col("gen") === g)
         .select("cell", "dir").coalesce(1)
         .write.mode("overwrite").parquet(s"$dstManifest/gen=$g")
     }
@@ -3850,8 +3882,7 @@ tvadc AS (SELECT tvcnd.qid, tvcnd.vec_id,
     // store stays the data root; the lane owns only a run-local
     // manifest + floor and vacuums THAT (the metadata half — see
     // vacuumManifest). No clone, O(manifest) entry on every scheme.
-    indexVersions(s, d) // stages the pristine store if absent
-    val pristine = versionDir(d)
+    val pristine = stageVersionStore(s, d)
     val laneRoot = vacuumDir(d)
     graft.io.LayoutFs.deleteTree(laneRoot)
     val laneManifest = s"$laneRoot/manifest"

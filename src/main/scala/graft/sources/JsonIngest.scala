@@ -39,10 +39,14 @@ object JsonIngest {
 
   def readInferFast(spark: SparkSession, path: String,
                     samplingRatio: Double = 0.05): DataFrame = {
-    val schema = spark.read
+    val file = sampleFile(spark, path)
+    val sampled = spark.read
       .option("samplingRatio", samplingRatio.toString)
-      .json(sampleFile(spark, path))
+      .json(file)
       .schema
+    // Spark samples rows with a fixed seed, so a small file can draw an
+    // empty sample every time: infer over the whole file instead
+    val schema = if (sampled.nonEmpty) sampled else spark.read.json(file).schema
     spark.read.schema(schema).json(path)
   }
 }

@@ -1232,17 +1232,15 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
   def streamVersionedServe(s: SparkSession, d: String): DataFrame = {
     import graft.expressions.VecDot.vecDot
     val hex = java.lang.Integer.toHexString(d.hashCode)
-    graft.ops.SimilarityOps.indexVersions(s, d) // ensure g0/g1 + manifest
-    val versionRoot = graft.ops.SimilarityOps.versionDir(d)
+    val versionRoot = graft.ops.SimilarityOps.stageVersionStore(s, d)
     val laneRoot = s"${System.getProperty("java.io.tmpdir")}/graft_svsrv_$hex"
     val laneManifest = s"$laneRoot/manifest"
     val outDir = s"$laneRoot/out"
     // run-local manifest starts at generation 0 ONLY — the stream's
     // foreachBatch commits gen 1 mid-flight, so this must reset per run
     Fixtures.clearDir(java.nio.file.Paths.get(laneRoot))
-    s.read.parquet(s"$versionRoot/manifest").filter(col("gen") === 0)
-      .select("cell", "dir").coalesce(1)
-      .write.mode("overwrite").parquet(s"$laneManifest/gen=0")
+    graft.ops.SimilarityOps.seedManifest(
+      s, s"$versionRoot/manifest", laneManifest, Seq(0))
     // the arrival stream: two files with ordered mtimes → two
     // deterministic micro-batches (evens then odds)
     val srcDir = java.nio.file.Paths.get(
@@ -1309,9 +1307,8 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
             // 1 while queries keep arriving — the NEXT batch resolves
             // it atomically, this one never saw it
             if (batchId == 0) {
-              s.read.parquet(s"$versionRoot/manifest")
-                .filter(col("gen") === 1).select("cell", "dir").coalesce(1)
-                .write.mode("overwrite").parquet(s"$laneManifest/gen=1")
+              graft.ops.SimilarityOps.seedManifest(
+                s, s"$versionRoot/manifest", laneManifest, Seq(1))
             }
           } finally { b.unpersist(); () }
         }
@@ -1352,8 +1349,7 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
     // (SimilarityOps.vacuumManifest — the Iceberg/Delta split), and
     // the physical GC half is vacuumTo, spec-proven on its own copy.
     Fixtures.clearDir(java.nio.file.Paths.get(laneRoot))
-    graft.ops.SimilarityOps.indexVersions(s, d) // stages the store if absent
-    val storeRoot = graft.ops.SimilarityOps.versionDir(d)
+    val storeRoot = graft.ops.SimilarityOps.stageVersionStore(s, d)
     graft.ops.SimilarityOps.seedManifest(
       s, s"$storeRoot/manifest", laneManifest, Seq(0))
     // the arrival stream: three files with ordered mtimes -> three

@@ -54,4 +54,22 @@ class JsonIngestSpec extends AnyFunSuite with SparkTestBase {
     assert(got.size == want.size)
     assert(got == want, "a field drifted through the JSONL round trip")
   }
+
+  test("a file too small for the row sample still infers its full schema") {
+    // Spark's row sampling uses a fixed seed, so a 5 % sample of a few
+    // lines is empty on every run; the read must not come back
+    // with zero columns
+    val dir = java.nio.file.Files.createTempDirectory("graft_jsonl_small")
+    val lines = (1 to 4).map(i => s"""{"doc_id": $i, "text": "doc $i"}""")
+    java.nio.file.Files.write(dir.resolve("part-00000.json"),
+      lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+    try {
+      val df = sources.JsonIngest.readInferFast(spark, dir.toString)
+      assert(df.schema.fieldNames.toSeq == Seq("doc_id", "text"),
+        s"inferred ${df.schema}")
+      val got = df.orderBy("doc_id").collect()
+        .map(r => (r.getLong(0), r.getString(1))).toSeq
+      assert(got == (1 to 4).map(i => (i.toLong, s"doc $i")))
+    } finally Fixtures.clearDir(dir)
+  }
 }

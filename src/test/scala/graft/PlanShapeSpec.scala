@@ -400,6 +400,42 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
       s"unbounded collect_list reappeared in the postings stage:\n$plan")
   }
 
+  /** `body`'s result and the Spark jobs it starts on this thread.
+    * Listener events arrive asynchronously but in order, so a closing
+    * sentinel job flushes every earlier job start before the count is read.
+    */
+  private def jobsStartedBy[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val group = s"job-fence-${java.util.UUID.randomUUID()}"
+    val sentinel = "job-fence-sentinel"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        if (props.exists(_.getProperty("spark.jobGroup.id") == group)) {
+          if (props.exists(_.getProperty("spark.job.description") == sentinel))
+            flushed.countDown()
+          else jobs.incrementAndGet()
+        }
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "job fence")
+      val result = body
+      sc.setJobDescription(sentinel)
+      sc.parallelize(Seq(1), 1).count()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "sentinel job never reached the listener")
+      (result, jobs.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("q212 serving fetch reuses q193's pruned shape: pruned store " +
        "FileScans + broadcast probe join (r12 plan-fence ask)") {
     // replicate the lane's batch-0 moment outside the stream: the
@@ -410,15 +446,24 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
     val laneRoot = s"${System.getProperty("java.io.tmpdir")}/graft_svvac_fence_$hex"
     val laneManifest = s"$laneRoot/manifest"
     Fixtures.clearDir(java.nio.file.Paths.get(laneRoot))
-    ops.SimilarityOps.indexVersions(spark, sf)
-    val storeRoot = ops.SimilarityOps.versionDir(sf)
+    val storeRoot = ops.SimilarityOps.stageVersionStore(spark, sf)
+    // a current store marker is a file read, never a Spark job
+    val (_, stageJobs) = jobsStartedBy { ops.SimilarityOps.stageVersionStore(spark, sf) }
+    assert(stageJobs == 0, s"staging a current store started $stageJobs jobs")
     ops.SimilarityOps.seedManifest(
       spark, s"$storeRoot/manifest", laneManifest, Seq(0))
     import spark.implicits._
     val probes = Seq((100L, 0L), (101L, 1L)).toDF("qid", "cell")
-    val plan = streaming.StreamingOps.svServeRelation(
-        spark, laneManifest, storeRoot, 0, Seq(0L, 1L), probes)
-      .queryExecution.executedPlan.toString
+    // per micro-batch, planning the fetch costs exactly the owner
+    // collect: manifest and store reads carry their schema (no
+    // inference job) and owners fold on the driver (no shuffle)
+    val (plan, serveJobs) = jobsStartedBy {
+      streaming.StreamingOps.svServeRelation(
+          spark, laneManifest, storeRoot, 0, Seq(0L, 1L), probes)
+        .queryExecution.executedPlan.toString
+    }
+    assert(serveJobs == 1,
+      s"planning the serving fetch started $serveJobs jobs, expected the owner collect only")
     assert(plan.linesIterator.exists(l =>
         l.contains("graft_genidx") && l.contains("PartitionFilters: [cell")),
       s"serving fetch does not prune the store scan on cell:\n$plan")
