@@ -514,7 +514,7 @@ object Plans {
       graft.io.LayoutFs.deleteTree(laneRoot)
       val laneManifest = s"$laneRoot/manifest"
       ops.SimilarityOps.seedManifest(
-        spark, s"$pristine/manifest", laneManifest, Seq(0, 1))
+        s"$pristine/manifest", laneManifest, Seq(0, 1))
       ops.SimilarityOps.vacuumManifest(spark, laneManifest, floor = 1)
       val cells = spark.read.parquet(laneManifest)
         .select("cell").distinct().collect().map(_.getLong(0)).sorted.toSeq

@@ -3619,7 +3619,7 @@ tvadc AS (SELECT tvcnd.qid, tvcnd.vec_id,
     StructField("cell", LongType), StructField("dir", StringType),
     StructField("gen", IntegerType)))
 
-  private def readManifest(s: SparkSession, manifestDir: String): DataFrame =
+  private[graft] def readManifest(s: SparkSession, manifestDir: String): DataFrame =
     s.read.schema(ManifestSchema).parquet(manifestDir)
 
   /** The (gen, cell, dir) manifest rows matching `pred`, collected —
@@ -3853,29 +3853,45 @@ tvadc AS (SELECT tvcnd.qid, tvcnd.vec_id,
     * from its directory layout: gen=<N> dirs are the lane's atomic
     * commit unit (seedManifest / the mid-stream gen write create them
     * whole; vacuumManifest deletes a generation's dir outright when
-    * it empties), so the max dir number IS the max committed gen.
-    * r18: q193/q212 resolved the pin with a per-micro-batch Spark job
-    * (parquet read + max aggregate) for what is a metadata question —
-    * this is one filesystem listing, the same class of operation the
-    * manifest exists to make cheap.
+    * it empties), so the max dir number IS the max committed gen —
+    * one filesystem listing, never a Spark job.
     */
-  private[graft] def latestGen(manifestDir: String): Int =
-    graft.io.LayoutFs.listSubdirNames(manifestDir)
+  private[graft] def latestGen(manifestDir: String): Int = {
+    val gens = graft.io.LayoutFs.listSubdirNames(manifestDir)
       .filter(_.startsWith("gen="))
       .map(_.stripPrefix("gen=").toInt)
-      .max
+    require(gens.nonEmpty, s"manifest $manifestDir has no committed generation (no gen=<N> dir)")
+    gens.max
+  }
 
-  /** Seed a run-local manifest from a store's committed one (tiny —
-    * cell-granularity metadata rows, never postings).
+  /** Seed a run-local manifest with a store's committed generations.
+    * `$srcManifest/gen=g` already is the (cell, dir) file commitManifest
+    * wrote, so a seed is a file-level clone (hardlinks on the local
+    * scheme — safe, manifest files are never written in place:
+    * vacuumManifest replaces a whole generation dir) into a staging
+    * dir, published by one rename: no Spark job, and a reader sees the
+    * generation whole or not at all. The staging name starts with `_`
+    * and holds no `=`, so Spark's file index and [[latestGen]] skip a
+    * crashed seed's leftover; the next seed of that generation reuses
+    * (clears) it.
     */
   private[graft] def seedManifest(
-      s: SparkSession, srcManifest: String, dstManifest: String,
-      gens: Seq[Int]): Unit =
+      srcManifest: String, dstManifest: String, gens: Seq[Int]): Unit =
     gens.foreach { g =>
-      readManifest(s, srcManifest).filter(col("gen") === g)
-        .select("cell", "dir").coalesce(1)
-        .write.mode("overwrite").parquet(s"$dstManifest/gen=$g")
+      val src = s"$srcManifest/gen=$g"
+      require(graft.io.LayoutFs.exists(src),
+        s"cannot seed generation $g: $src is not committed")
+      val stage = seedStage(dstManifest, g)
+      val dst = s"$dstManifest/gen=$g"
+      graft.io.LayoutFs.deleteTree(stage)
+      graft.io.LayoutFs.cloneTree(src, stage)
+      graft.io.LayoutFs.deleteTree(dst)
+      graft.io.LayoutFs.rename(stage, dst)
     }
+
+  /** Where [[seedManifest]] stages generation `g` before publishing it. */
+  private[graft] def seedStage(dstManifest: String, g: Int): String =
+    s"$dstManifest/_seeding_g$g"
 
   def indexVacuum(s: SparkSession, d: String): DataFrame = {
     // generation-pinned overlay entry (r16 verdict #3): the pristine
@@ -3886,7 +3902,7 @@ tvadc AS (SELECT tvcnd.qid, tvcnd.vec_id,
     val laneRoot = vacuumDir(d)
     graft.io.LayoutFs.deleteTree(laneRoot)
     val laneManifest = s"$laneRoot/manifest"
-    seedManifest(s, s"$pristine/manifest", laneManifest, Seq(0, 1))
+    seedManifest(s"$pristine/manifest", laneManifest, Seq(0, 1))
     val kit = sharedKitAtNq(s, d)
     val probeCells = kit.probes.filter(col("qid") === 0)
       .select("cell").collect().map(_.getLong(0)).sorted.toSeq

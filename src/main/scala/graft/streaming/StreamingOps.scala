@@ -3,7 +3,7 @@ package graft.streaming
 import graft.{Fixtures, Q, Tables}
 import graft.functions.HashFns._
 import graft.ops.EventOps
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -1135,20 +1135,7 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
     val qname = s"graft_saq_$hex"
     val srcDir = java.nio.file.Paths.get(
       System.getProperty("java.io.tmpdir"), s"graft_saq_src_$hex")
-    val marker = srcDir.resolve("_STAGED")
-    if (!Fixtures.markerCurrent(marker, s"$d/embeddings.parquet")) {
-      Fixtures.clearDir(srcDir)
-      java.nio.file.Files.createDirectories(srcDir)
-      val part = java.nio.file.Files.createTempDirectory("graft_saq_stage")
-      Tables.embeddings(s, d).filter(col("vec_id") % 7 === 5)
-        .select("vec_id", "embedding")
-        .coalesce(1).write.mode("overwrite").parquet(part.toString)
-      val f = new java.io.File(part.toString).listFiles()
-        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).head
-      java.nio.file.Files.move(f.toPath, srcDir.resolve("delta.parquet"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      Fixtures.writeMarker(marker, s"$d/embeddings.parquet")
-    }
+    stageArrivalSlices(s, d, srcDir, Seq(lit(true)))
     val (kitDf, _) = graft.ops.SimilarityOps.ingestCoderKitDf(s, d)
     val layout = graft.ops.SimilarityOps.vectorLayoutDir(s, d)
     val nProbes = graft.ops.SimilarityOps.IvfProbes
@@ -1229,97 +1216,11 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
   //      Output = each arrival's fetched postings tagged with the
   //      generation that served it; oracle derives batch 0 from the
   //      pre-delta corpus and batch 1 from the full corpus. ----
-  def streamVersionedServe(s: SparkSession, d: String): DataFrame = {
-    import graft.expressions.VecDot.vecDot
-    val hex = java.lang.Integer.toHexString(d.hashCode)
-    val versionRoot = graft.ops.SimilarityOps.stageVersionStore(s, d)
-    val laneRoot = s"${System.getProperty("java.io.tmpdir")}/graft_svsrv_$hex"
-    val laneManifest = s"$laneRoot/manifest"
-    val outDir = s"$laneRoot/out"
-    // run-local manifest starts at generation 0 ONLY — the stream's
-    // foreachBatch commits gen 1 mid-flight, so this must reset per run
-    Fixtures.clearDir(java.nio.file.Paths.get(laneRoot))
-    graft.ops.SimilarityOps.seedManifest(
-      s, s"$versionRoot/manifest", laneManifest, Seq(0))
-    // the arrival stream: two files with ordered mtimes → two
-    // deterministic micro-batches (evens then odds)
-    val srcDir = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), s"graft_svsrv_src_$hex")
-    val marker = srcDir.resolve("_STAGED")
-    if (!Fixtures.markerCurrent(marker, s"$d/embeddings.parquet")) {
-      Fixtures.clearDir(srcDir)
-      java.nio.file.Files.createDirectories(srcDir)
-      Seq(("evens", col("vec_id") % 2 === 0, 20000L),
-          ("odds", col("vec_id") % 2 =!= 0, 10000L)).foreach {
-        case (name, pred, ageMs) =>
-          val part = java.nio.file.Files.createTempDirectory("graft_svsrv_stage")
-          Tables.embeddings(s, d).filter(col("vec_id") % 7 === 5 && pred)
-            .select("vec_id", "embedding")
-            .coalesce(1).write.mode("overwrite").parquet(part.toString)
-          val f = new java.io.File(part.toString).listFiles()
-            .filter(f => f.getName.startsWith("part-") &&
-              f.getName.endsWith(".parquet")).head
-          val dst = srcDir.resolve(s"$name.parquet")
-          java.nio.file.Files.move(f.toPath, dst,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          dst.toFile.setLastModified(System.currentTimeMillis() - ageMs)
-      }
-      Fixtures.writeMarker(marker, s"$d/embeddings.parquet")
-    }
-    val (kitDf, _) = graft.ops.SimilarityOps.ingestCoderKitDf(s, d)
-    val nProbes = graft.ops.SimilarityOps.IvfProbes
-    withStreamShufflePartitions(s, 2) {
-      val routed = s.readStream.schema(StructType(Seq(
-          StructField("vec_id", LongType),
-          StructField("embedding", ArrayType(FloatType)))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir.toString)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-        .withColumn("jk", lit(1))
-        .join(broadcast(kitDf.withColumn("jk", lit(1))), Seq("jk"))
-        .drop("jk")
-        .withColumn("qn", sqrt(vecDot(col("qv"), col("qv"))))
-        .withColumn("pcells", slice(array_sort(transform(col("cents"), c =>
-          struct((-vecDot(col("qv"), c.getField("cv"))
-                   / (col("qn") * c.getField("cn"))).as("negsim"),
-                 c.getField("cid").as("cid")))), 1, nProbes))
-        .select(col("qid"),
-                explode(transform(col("pcells"), p => p.getField("cid"))).as("cell"))
-      val q = routed.writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val b = batch.persist()
-          try {
-            val cells = b.select("cell").distinct()
-              .collect().map(_.getLong(0)).sorted.toSeq
-            if (cells.nonEmpty) {
-              // resolve the generation COMMITTED AT FETCH TIME — a
-              // manifest-dir listing (r18), not a per-batch Spark job
-              val pin = graft.ops.SimilarityOps.latestGen(laneManifest)
-              graft.ops.SimilarityOps
-                .manifestPinnedRead(s, laneManifest, versionRoot, pin, cells)
-                .join(broadcast(b.select("qid", "cell")), Seq("cell"))
-                .filter(col("vec_id") =!= col("qid"))
-                .select(lit(pin).as("gen_served"), col("qid"), col("cell"),
-                        col("vec_id"), col("s"), col("code"), col("err_e6"))
-                .write.mode("append").parquet(outDir)
-            }
-            // the production moment: the compactor commits generation
-            // 1 while queries keep arriving — the NEXT batch resolves
-            // it atomically, this one never saw it
-            if (batchId == 0) {
-              graft.ops.SimilarityOps.seedManifest(
-                s, s"$versionRoot/manifest", laneManifest, Seq(1))
-            }
-          } finally { b.unpersist(); () }
-        }
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    s.read.parquet(outDir)
+  def streamVersionedServe(s: SparkSession, d: String): DataFrame =
+    serveStream(s, d, "svsrv", Seq(col("vec_id") % 2 === 0, col("vec_id") % 2 =!= 0))(
+        (_, _) => ())
       .select("gen_served", "qid", "cell", "vec_id", "s", "code", "err_e6")
       .orderBy("gen_served", "qid", "cell", "vec_id", "s")
-  }
 
   // ---- q212: STREAMING VACUUM UNDER LIVE SERVING — q193 proved the
   //      zero-downtime SWAP; q210 proved the manifest-driven VACUUM;
@@ -1329,54 +1230,58 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
   //      — and then the VACUUM reclaims gen 0's superseded cells while
   //      the stream is still up, with batch 2 proving post-vacuum
   //      serving is indistinguishable from batch 1 (the oracle derives
-  //      both from the full corpus). The lane clones the generation
-  //      store per run (q210's discipline — q191's pristine store is
-  //      never mutated) and the vacuum is the exact q210 primitive
-  //      (floor recorded, sub-floor pins refuse). Three query slices
-  //      (qid % 3, mtime-ordered files) make three deterministic
-  //      micro-batches. ----
-  def streamVacuumServe(s: SparkSession, d: String): DataFrame = {
+  //      both from the full corpus). The pristine q191 store stays the
+  //      immutable data root; the lane owns only a run-local manifest
+  //      + floor, and the vacuum is its metadata half
+  //      (SimilarityOps.vacuumManifest — the Iceberg/Delta split; the
+  //      physical GC half, vacuumTo, is spec-proven on its own copy).
+  //      Three query slices (qid % 3, mtime-ordered files) make three
+  //      deterministic micro-batches. ----
+  def streamVacuumServe(s: SparkSession, d: String): DataFrame =
+    serveStream(s, d, "svvac", (0 until 3).map(i => col("vec_id") % 3 === i)) {
+      (batchId, laneManifest) =>
+        // after batch 1: gen 0's superseded rows leave the run-local
+        // manifest and the floor is recorded while the stream is live;
+        // batch 2 must serve gen 1 unchanged
+        if (batchId == 1) {
+          graft.ops.SimilarityOps.vacuumManifest(s, laneManifest, floor = 1)
+          ()
+        }
+    }.orderBy("batch", "qid", "cell", "vec_id", "s")
+
+  /** The output log of q193/q212's serving stream, as [[serveStream]]
+    * writes it; reads pin it, so none starts a schema-inference job.
+    */
+  private val ServeOutSchema = StructType(
+    Seq("batch", "gen_served").map(StructField(_, IntegerType)) ++
+      Seq("qid", "cell", "vec_id", "s", "code", "err_e6").map(StructField(_, LongType)))
+
+  /** q193/q212's serving stream. Each of `slices` (over the % 7 = 5
+    * query vectors) arrives as one mtime-ordered file, so one micro-batch,
+    * in order. A fresh run-local manifest at gen 0 over q191's pristine
+    * store is the lane's only mutable state. Per batch: one collect of
+    * the routed (qid, cell) probes, then the manifest-pinned fetch of
+    * their cells (pin resolved AT FETCH TIME) against the probes as a
+    * broadcast local relation, appended to the output log tagged with
+    * its batch and serving generation. After batch 0 the compactor's
+    * gen 1 commits (the zero-downtime swap — the next batch resolves it
+    * atomically, this one never saw it); then `afterBatch(batchId,
+    * laneManifest)` runs. Returns the output log.
+    */
+  private def serveStream(s: SparkSession, d: String, lane: String, slices: Seq[Column])(
+      afterBatch: (Long, String) => Unit): DataFrame = {
     import graft.expressions.VecDot.vecDot
     val hex = java.lang.Integer.toHexString(d.hashCode)
-    val laneRoot = s"${System.getProperty("java.io.tmpdir")}/graft_svvac_$hex"
+    val tmp = System.getProperty("java.io.tmpdir")
+    val laneRoot = s"$tmp/graft_${lane}_$hex"
     val laneManifest = s"$laneRoot/manifest"
     val outDir = s"$laneRoot/out"
-    // generation-pinned overlay entry (r16 verdict #3): the pristine
-    // q191 store stays the immutable data root; the lane owns ONLY a
-    // run-local manifest + floor (fresh every run — the mid-stream
-    // commit and the online vacuum both mutate the manifest, never
-    // the data). No clone: the online vacuum is the metadata half
-    // (SimilarityOps.vacuumManifest — the Iceberg/Delta split), and
-    // the physical GC half is vacuumTo, spec-proven on its own copy.
-    Fixtures.clearDir(java.nio.file.Paths.get(laneRoot))
     val storeRoot = graft.ops.SimilarityOps.stageVersionStore(s, d)
-    graft.ops.SimilarityOps.seedManifest(
-      s, s"$storeRoot/manifest", laneManifest, Seq(0))
-    // the arrival stream: three files with ordered mtimes -> three
-    // deterministic micro-batches (qid % 3 slices)
-    val srcDir = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), s"graft_svvac_src_$hex")
-    val marker = srcDir.resolve("_STAGED")
-    if (!Fixtures.markerCurrent(marker, s"$d/embeddings.parquet")) {
-      Fixtures.clearDir(srcDir)
-      java.nio.file.Files.createDirectories(srcDir)
-      (0 until 3).foreach { i =>
-        val part = java.nio.file.Files.createTempDirectory("graft_svvac_stage")
-        Tables.embeddings(s, d)
-          .filter(col("vec_id") % 7 === 5 && col("vec_id") % 3 === i)
-          .select("vec_id", "embedding")
-          .coalesce(1).write.mode("overwrite").parquet(part.toString)
-        val f = new java.io.File(part.toString).listFiles()
-          .filter(f => f.getName.startsWith("part-") &&
-            f.getName.endsWith(".parquet")).head
-        val dst = srcDir.resolve(s"f$i.parquet")
-        java.nio.file.Files.move(f.toPath, dst,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        dst.toFile.setLastModified(
-          System.currentTimeMillis() - (30000L - i * 10000L))
-      }
-      Fixtures.writeMarker(marker, s"$d/embeddings.parquet")
-    }
+    val storeManifest = s"$storeRoot/manifest"
+    Fixtures.clearDir(java.nio.file.Paths.get(laneRoot))
+    graft.ops.SimilarityOps.seedManifest(storeManifest, laneManifest, Seq(0))
+    val srcDir = java.nio.file.Paths.get(tmp, s"graft_${lane}_src_$hex")
+    stageArrivalSlices(s, d, srcDir, slices)
     val (kitDf, _) = graft.ops.SimilarityOps.ingestCoderKitDf(s, d)
     val nProbes = graft.ops.SimilarityOps.IvfProbes
     withStreamShufflePartitions(s, 2) {
@@ -1398,46 +1303,63 @@ FROM dw LEFT JOIN vs USING (w) GROUP BY doc_id ORDER BY doc_id"""
                 explode(transform(col("pcells"), p => p.getField("cid"))).as("cell"))
       val q = routed.writeStream.outputMode("append")
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val b = batch.persist()
-          try {
-            val cells = b.select("cell").distinct()
-              .collect().map(_.getLong(0)).sorted.toSeq
-            if (cells.nonEmpty) {
-              // pin from the manifest-dir listing (r18) — see q193
-              val pin = graft.ops.SimilarityOps.latestGen(laneManifest)
-              svServeRelation(s, laneManifest, storeRoot, pin, cells,
-                  b.select("qid", "cell"))
-                .select(lit(batchId).cast("int").as("batch"),
-                        lit(pin).as("gen_served"), col("qid"), col("cell"),
-                        col("vec_id"), col("s"), col("code"), col("err_e6"))
-                .write.mode("append").parquet(outDir)
-            }
-            // after batch 0: the zero-downtime swap (the q193 moment)
-            if (batchId == 0) {
-              graft.ops.SimilarityOps.seedManifest(
-                s, s"$storeRoot/manifest", laneManifest, Seq(1))
-            }
-            // after batch 1: the ONLINE vacuum (the q210 primitive,
-            // metadata half) — gen 0's superseded rows leave the
-            // run-local manifest and the floor is recorded while the
-            // stream is live; batch 2 must serve gen 1 unchanged
-            if (batchId == 1) {
-              graft.ops.SimilarityOps.vacuumManifest(s, laneManifest, floor = 1)
-              ()
-            }
-          } finally { b.unpersist(); () }
+          // the probe set is query-scale: the broadcast would collect
+          // it to the driver anyway, so collect once and reuse the rows
+          val probes = batch.collect()
+          val cells = probes.map(_.getLong(1)).distinct.sorted.toSeq
+          if (cells.nonEmpty) {
+            // the generation committed at fetch time — a manifest-dir listing
+            val pin = graft.ops.SimilarityOps.latestGen(laneManifest)
+            svServeRelation(s, laneManifest, storeRoot, pin, cells,
+                s.createDataFrame(java.util.Arrays.asList(probes: _*), batch.schema))
+              .select(lit(batchId).cast("int").as("batch"),
+                      lit(pin).as("gen_served"), col("qid"), col("cell"),
+                      col("vec_id"), col("s"), col("code"), col("err_e6"))
+              .write.mode("append").parquet(outDir)
+          }
+          if (batchId == 0)
+            graft.ops.SimilarityOps.seedManifest(storeManifest, laneManifest, Seq(1))
+          afterBatch(batchId, laneManifest)
         }
         .start()
       try q.processAllAvailable()
       finally q.stop()
     }
-    s.read.parquet(outDir)
-      .select("batch", "gen_served", "qid", "cell", "vec_id", "s", "code",
-              "err_e6")
-      .orderBy("batch", "qid", "cell", "vec_id", "s")
+    s.read.schema(ServeOutSchema).parquet(outDir)
   }
 
-  /** q212's per-micro-batch serving relation — the q193 manifest-pinned
+  /** Stage the % 7 = 5 query vectors as one arrival file per slice
+    * under `srcDir`, oldest first (mtimes 10 s apart, so a
+    * maxFilesPerTrigger=1 stream reads them as ordered micro-batches),
+    * unless its marker is current. Each slice is written to `_stage`
+    * inside `srcDir` and its part file moved out; the stage dir is
+    * removed after every slice, and a crashed staging leaves no marker,
+    * so the next call clears it with the rest of `srcDir`.
+    */
+  private[graft] def stageArrivalSlices(s: SparkSession, d: String,
+      srcDir: java.nio.file.Path, slices: Seq[Column]): Unit = {
+    val marker = srcDir.resolve("_STAGED")
+    if (!Fixtures.markerCurrent(marker, s"$d/embeddings.parquet")) {
+      Fixtures.clearDir(srcDir)
+      val stage = srcDir.resolve("_stage")
+      slices.zipWithIndex.foreach { case (pred, i) =>
+        Tables.embeddings(s, d).filter(col("vec_id") % 7 === 5 && pred)
+          .select("vec_id", "embedding")
+          .coalesce(1).write.mode("overwrite").parquet(stage.toString)
+        val f = stage.toFile.listFiles()
+          .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).head
+        val dst = srcDir.resolve(s"slice$i.parquet")
+        java.nio.file.Files.move(f.toPath, dst,
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        dst.toFile.setLastModified(
+          System.currentTimeMillis() - (slices.size - i) * 10000L)
+        Fixtures.clearDir(stage)
+      }
+      Fixtures.writeMarker(marker, s"$d/embeddings.parquet")
+    }
+  }
+
+  /** q193/q212's per-micro-batch serving relation — the manifest-pinned
     * pruned fetch joined against the batch's broadcast probe set. A
     * named surface so PlanShapeSpec can fence the shape (pruned store
     * FileScans + broadcast probe join) outside the running stream.

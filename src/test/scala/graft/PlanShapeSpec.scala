@@ -8,6 +8,14 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
 
+  /** Jobs of one forced q212 pass (3 micro-batches) at the test scale:
+    * per batch the kit broadcast, the probe collect, the owner collect,
+    * the probe broadcast and the output write; the vacuum's manifest
+    * collect (gen 1 supersedes every gen-0 cell here, so no rewrite);
+    * the sorted output read's sample, shuffle-map and result jobs.
+    */
+  private val Q212PassJobs = 19
+
   private def physical(name: String): String = {
     val q = Registry.all.find(_.name == name).get
     q.build(spark, sf).queryExecution.executedPlan.toString
@@ -354,7 +362,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
     io.LayoutFs.deleteTree(laneRoot)
     val laneManifest = s"$laneRoot/manifest"
     ops.SimilarityOps.seedManifest(
-      spark, s"$pristine/manifest", laneManifest, Seq(0, 1))
+      s"$pristine/manifest", laneManifest, Seq(0, 1))
     ops.SimilarityOps.vacuumManifest(spark, laneManifest, floor = 1)
     val plan = ops.SimilarityOps.manifestPinnedRead(
         spark, laneManifest, pristine, 1, Seq(0L, 1L))
@@ -400,11 +408,13 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
       s"unbounded collect_list reappeared in the postings stage:\n$plan")
   }
 
-  /** `body`'s result and the Spark jobs it starts on this thread.
+  /** `body`'s result and the Spark jobs it starts on this thread — or,
+    * with `allThreads`, on any thread (a stream's micro-batches run on
+    * the query's own thread, outside this thread's job group).
     * Listener events arrive asynchronously but in order, so a closing
     * sentinel job flushes every earlier job start before the count is read.
     */
-  private def jobsStartedBy[T](body: => T): (T, Int) = {
+  private def jobsStartedBy[T](body: => T, allThreads: Boolean = false): (T, Int) = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val group = s"job-fence-${java.util.UUID.randomUUID()}"
     val sentinel = "job-fence-sentinel"
@@ -413,11 +423,10 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         val props = Option(e.properties)
-        if (props.exists(_.getProperty("spark.jobGroup.id") == group)) {
-          if (props.exists(_.getProperty("spark.job.description") == sentinel))
-            flushed.countDown()
-          else jobs.incrementAndGet()
-        }
+        val ours = props.exists(_.getProperty("spark.jobGroup.id") == group)
+        if (ours && props.exists(_.getProperty("spark.job.description") == sentinel))
+          flushed.countDown()
+        else if (ours || allThreads) jobs.incrementAndGet()
       }
     }
     val sc = spark.sparkContext
@@ -436,6 +445,58 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("manifest seed publish: file-level (0 jobs), a crashed seed's " +
+       "staging dir is invisible, and a re-run converges") {
+    val sim = ops.SimilarityOps
+    val storeRoot = sim.stageVersionStore(spark, sf)
+    val storeManifest = s"$storeRoot/manifest"
+    val hex = java.lang.Integer.toHexString(sf.hashCode)
+    val laneManifest =
+      s"${System.getProperty("java.io.tmpdir")}/graft_seedfence_$hex/manifest"
+    io.LayoutFs.deleteTree(laneManifest)
+    val (_, seedJobs) = jobsStartedBy { sim.seedManifest(storeManifest, laneManifest, Seq(0)) }
+    assert(seedJobs == 0, s"seeding one generation started $seedJobs jobs")
+    // a gen-1 seed that crashed after its clone, before the publishing
+    // rename, leaves the whole generation in its staging dir
+    val stage = sim.seedStage(laneManifest, 1)
+    io.LayoutFs.cloneTree(s"$storeManifest/gen=1", stage)
+    def rows(dir: String): Seq[(Int, Long, String)] =
+      sim.readManifest(spark, dir).collect()
+        .map(r => (r.getInt(2), r.getLong(0), r.getString(1))).sorted.toSeq
+    val storeRows = rows(storeManifest)
+    assert(storeRows.map(_._1).distinct == Seq(0, 1))
+    assert(sim.latestGen(laneManifest) == 0, "latestGen took the staging dir for a generation")
+    assert(rows(laneManifest) == storeRows.filter(_._1 == 0),
+      "readManifest saw rows of an unpublished generation")
+    val cells = storeRows.map(_._2).distinct.sorted
+    def served(manifest: String, pin: Int) =
+      sim.manifestPinnedRead(spark, manifest, storeRoot, pin, cells)
+        .orderBy("cell", "vec_id", "s").collect().toSeq
+    val gen0 = served(storeManifest, 0)
+    assert(gen0 != served(storeManifest, 1), "fixture: gen 1 must change some cell")
+    assert(served(laneManifest, 1) == gen0,
+      "a pin-1 read served the unpublished generation")
+    val (_, reseedJobs) = jobsStartedBy { sim.seedManifest(storeManifest, laneManifest, Seq(1)) }
+    assert(reseedJobs == 0, s"re-seeding started $reseedJobs jobs")
+    assert(sim.latestGen(laneManifest) == 1)
+    assert(rows(laneManifest) == storeRows, "the re-run seed did not converge")
+    assert(!io.LayoutFs.exists(stage), "the re-run left the staging dir behind")
+    val e = intercept[IllegalArgumentException] {
+      sim.seedManifest(storeManifest, laneManifest, Seq(7))
+    }
+    assert(e.getMessage.contains("gen=7"), e.getMessage)
+    assert(sim.latestGen(laneManifest) == 1, "a failed seed published a generation")
+  }
+
+  test("q212 lane: one forced pass over a staged store starts at most " +
+       s"$Q212PassJobs Spark jobs, the stream thread's included") {
+    def pass(): Unit = streaming.StreamingOps.streamVacuumServe(spark, sf)
+      .write.format("noop").mode("overwrite").save()
+    pass() // stages the store, the arrival slices and the coder kit
+    val (_, jobs) = jobsStartedBy(pass(), allThreads = true)
+    assert(jobs <= Q212PassJobs, s"a q212 pass started $jobs jobs")
+  }
+
   test("q212 serving fetch reuses q193's pruned shape: pruned store " +
        "FileScans + broadcast probe join (r12 plan-fence ask)") {
     // replicate the lane's batch-0 moment outside the stream: the
@@ -451,7 +512,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
     val (_, stageJobs) = jobsStartedBy { ops.SimilarityOps.stageVersionStore(spark, sf) }
     assert(stageJobs == 0, s"staging a current store started $stageJobs jobs")
     ops.SimilarityOps.seedManifest(
-      spark, s"$storeRoot/manifest", laneManifest, Seq(0))
+      s"$storeRoot/manifest", laneManifest, Seq(0))
     import spark.implicits._
     val probes = Seq((100L, 0L), (101L, 1L)).toDF("qid", "cell")
     // per micro-batch, planning the fetch costs exactly the owner

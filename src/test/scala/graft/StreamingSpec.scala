@@ -363,6 +363,27 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     assert(got.size.toLong == nDelta * ops.SimilarityOps.PqM)
   }
 
+  test("arrival-slice staging leaves only its slice files and marker behind") {
+    val hex = java.lang.Integer.toHexString(sf.hashCode)
+    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    val srcDir = tmp.resolve(s"graft_slicespec_src_$hex")
+    val slices = Seq(col("vec_id") % 2 === 0, col("vec_id") % 2 =!= 0)
+    def stageDirs(): Set[String] =
+      tmp.toFile.list().filter(_.contains("_stage")).toSet
+    try {
+      StreamingOps.stageArrivalSlices(spark, sf, srcDir, slices)
+      // clear the marker: the next call re-stages every slice
+      java.nio.file.Files.delete(srcDir.resolve("_STAGED"))
+      val before = stageDirs()
+      StreamingOps.stageArrivalSlices(spark, sf, srcDir, slices)
+      assert(srcDir.toFile.list().sorted.toSeq ==
+        Seq("_STAGED", "slice0.parquet", "slice1.parquet"))
+      assert(stageDirs() -- before == Set.empty, "staging leaked a temp dir")
+      val mtimes = Seq(0, 1).map(i => srcDir.resolve(s"slice$i.parquet").toFile.lastModified)
+      assert(mtimes(0) < mtimes(1), s"slices must arrive in order: $mtimes")
+    } finally Fixtures.clearDir(srcDir)
+  }
+
   test("q180 stream ANN serving == batch probe-and-score of the arrival slice") {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.expressions.Window

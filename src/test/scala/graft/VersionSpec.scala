@@ -138,6 +138,18 @@ class VersionSpec extends AnyFunSuite with SparkTestBase {
       s"wrong failure mode: ${e.getMessage}")
   }
 
+  test("latestGen on a manifest with no committed generation names the dir") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_nogen")
+    try {
+      // only a crashed seed's staging dir: nothing is committed yet
+      java.nio.file.Files.createDirectories(
+        java.nio.file.Paths.get(SimilarityOps.seedStage(dir.toString, 0)))
+      val e = intercept[IllegalArgumentException](SimilarityOps.latestGen(dir.toString))
+      assert(e.getMessage.contains(dir.toString) &&
+        e.getMessage.contains("no committed generation"), e.getMessage)
+    } finally Fixtures.clearDir(dir)
+  }
+
   test("q212: the mid-stream vacuum genuinely fired — floor recorded, " +
        "gen-0 rows reclaimed from the lane manifest, batch 2 still served from gen 1") {
     val out = streaming.StreamingOps.streamVacuumServe(spark, sf).collect()
